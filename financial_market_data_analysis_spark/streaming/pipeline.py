@@ -66,13 +66,6 @@ def join_feeds(
     return out
 
 
-def dedup_all_columns(df: DataFrame) -> DataFrame:
-    """D1 — the reference's ``dropDuplicates()`` over all columns
-    (spark_consumer.py:477). Kept for parity; at scale prefer
-    ``dedup_within_watermark`` below."""
-    return df.dropDuplicates()
-
-
 def dedup_within_watermark(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Scale path: key-scoped dedup with watermark-bounded state
     (``dropDuplicatesWithinWatermark``, Spark 3.5+) — state holds one
@@ -99,8 +92,8 @@ def epoch_idempotent_writer(
     overwrite on (*partition_by, epoch_col): a retried epoch REPLACES
     exactly its own partition directories — including a partial write
     left by a mid-epoch crash — instead of appending duplicate bars.
-    This is the same pattern the prediction sink uses, now on the bars
-    warehouse; the reference's JDBC append is at-least-once with
+    The bars warehouse and the prediction sink both write through it;
+    the reference's JDBC append is at-least-once with
     dedup-hope (spark_consumer.py:68-84). ``epoch_col=None`` reverts to
     the reference-exact plain append.
 
@@ -601,17 +594,6 @@ def compact_warehouse(
         w = w.partitionBy(*partition_by)
     w.parquet(dest_path)
     return spark.read.parquet(dest_path).count()
-
-
-def console_sink(stream: DataFrame, trigger: dict | None = None, num_rows: int = 20):
-    """K3 — the debug console sink (the reference keeps one commented
-    out, spark_consumer.py:504-506)."""
-    return _apply_trigger(
-        stream.writeStream.format("console")
-        .option("numRows", str(num_rows))
-        .outputMode("append"),
-        trigger,
-    )
 
 
 def jdbc_append_sink(
@@ -1225,6 +1207,8 @@ def streaming_predictions(
     appending duplicate prediction rows — idempotent per epoch.
     """
 
+    write = epoch_idempotent_writer(predictions_path)
+
     def _hook(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
         keys = batch.select(order_col).distinct()
@@ -1245,13 +1229,8 @@ def streaming_predictions(
         out = fresh.select(
             order_col, *keep_cols,
             F.col("prediction").cast("double").alias("prediction"),
-        ).withColumn("epoch_id", F.lit(epoch_id))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(predictions_path)
         )
+        write(out, epoch_id, skip_empty_probe=True)
 
     return _hook
 

@@ -3,6 +3,7 @@ smoke-scale tables — a local mirror of the driver's sf0.01 gate."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -60,6 +61,25 @@ def test_full_row_width_and_registry_columns(spark):
               "bid_6_size", "ask_3", "delta_MA12", "up2"):
         assert c in df.columns, c
     assert df.count() > 0
+
+
+def test_bars_joined_and_full_row_agree_on_shared_columns(spark):
+    """The 44-column and 117-column warehouse rows are one assembler at two
+    widths: every column they share (all but bars_joined's one-column
+    COT/indicator summaries) must match row for row."""
+    from financial_market_data_analysis_spark.plans.full_row import full_row
+    from financial_market_data_analysis_spark.plans.pipeline import bars_joined
+
+    narrow = bars_joined(spark, SF_SMOKE)
+    wide = full_row(spark, SF_SMOKE)
+    shared = [c for c in narrow.columns if c in wide.columns]
+    assert len(shared) == 40, shared
+    a = narrow.select(*shared).toPandas().sort_values("bucket_start")
+    b = wide.select(*shared).toPandas().sort_values("bucket_start")
+    assert len(a) > 0
+    pd.testing.assert_frame_equal(
+        a.reset_index(drop=True), b.reset_index(drop=True), check_exact=True
+    )
 
 
 def test_adjudication_window_boundary_is_stable():

@@ -37,7 +37,9 @@ WINDOW = 50
 
 
 def current_round() -> int:
-    m = re.search(r"#\s*VERDICT\s*—\s*Round\s+(\d+)", (ROOT / "VERDICT.md").read_text())
+    m = re.search(
+        r"#\s*VERDICT\s*—\s*Round\s+(\d+)", (ROOT / "VERDICT.md").read_text(), re.IGNORECASE
+    )
     if not m:
         raise SystemExit("cannot parse round number from VERDICT.md")
     return int(m.group(1)) + 1
