@@ -3347,7 +3347,7 @@ _S16_Y_HI = 14400  # seconds-of-day predicate: before 04:00 (~1/6 of rows)
 
 
 def _s16_zorder_vs_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S16 — x29's Z-ORDER claim, MEASURED (the d9/x80 measured-
+    """S16 — x29's Z-ORDER claim, MEASURED (the d9 measured-
     trade-off discipline applied to the clustering-key decision, with
     s14's footer-census proof machinery): the same events land in two
     layouts — linearly range-clustered by ``x`` (event id) and
@@ -9134,7 +9134,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # applied to the state store
         "t31_state_metrics_proof": _t31_state_metrics_proof,
         # x81: x24's sequence packer priced across token budgets (the
-        # x80 sweep discipline): per B ∈ {512..4096}, the cut-document
+        # published-trade-off sweep): per B ∈ {512..4096}, the cut-document
         # count (docs split across packs) vs the padding waste
         # (per-shard final-pack tails) — the context-length decision
         # table for a packing run; one window pass serves all four
@@ -9264,12 +9264,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # hash join after the runtime demotion) and pinned j5 +
         # keeper q5 (the broadcast-dim snowflake assemblies)
         "j7_broadcast_proof": _j7_broadcast_proof,
-        # x80: the sketch-size sweep is carried in-window by x69
-        # (rotated in — the band-LSH tuning sweep over the same
-        # shingle→minhash→band machinery) and x81 (the sweep-table
-        # family); the bytes-vs-accuracy table stays
-        # pytest-oracle-checked
-        "x80_minhash_size_sweep": X.q_minhash_size_sweep,
         # d9: the salt-balance layout model is carried in-window by d8
         # (the skew measurement over the same per-key distribution,
         # keeper) and j9 (the AQE skew proof adjudicating the runtime
@@ -9478,12 +9472,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the harder double-correlated form); the scalar-avg-threshold
         # gate is q11's in-window global-scalar-broadcast-back kernel
         "q22_idle_balances": _q22_idle_balances,
-        # x76 (note updated r17: x80 displaced): the shingle/gram
-        # build + gram-keyed partial aggregation runs in-window inside
-        # x69 (the same 8-gram scan feeding LSH banding, rotated back
-        # in) and x74's decontamination stage (bench-shingle gram
-        # anti-join); the novelty-fraction algebra stays
-        # pytest-oracle-checked every session
+        # x76: the shingle/gram build + gram-keyed partial aggregation
+        # runs in-window inside x69 (the same 8-gram scan feeding LSH
+        # banding, rotated back in) and x74's decontamination stage
+        # (bench-shingle gram anti-join); the novelty-fraction algebra
+        # stays pytest-oracle-checked every session
         "x76_ngram_novelty": X.q_ngram_novelty,
         # -- displaced in round 12: five round-8-born
         # queries, each THRICE driver-green (r9 + r10 + r11), subsumed
@@ -9787,8 +9780,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x9_embed_neardup": X.q_embed_neardup,
         "x10_multimodal_features": X.q_multimodal_features,
         "x7_ngram_jaccard": X.q_ngram_jaccard,
-        "x6b_minhash_xxhash": X.q_minhash_xxhash,  # rows-only (no xxhash64 in SQL)
-        "x6c_minhash_oph": X.q_minhash_oph,
         "x1_text_stats": X.q_text_stats,
         "x2_lang_id": X.q_lang_id,
         "x3_fingerprints": X.q_fingerprints,
@@ -10385,7 +10376,6 @@ def oracle_sql() -> dict[str, str]:
         "t28_stream_sessionize": _T28_ORACLE,
         "w26_range_beta": _W26_ORACLE,
         "j7_broadcast_proof": _J7_ORACLE,
-        "x80_minhash_size_sweep": X.minhash_size_sweep_oracle(),
         "d9_salt_balance": _D9_ORACLE,
         "s15_epoch_compaction": _S15_ORACLE,
         "j8_dpp_proof": _J8_ORACLE,
@@ -10745,7 +10735,6 @@ def oracle_sql() -> dict[str, str]:
         "x4_simhash": simhash32_sql(),
         "x5_dedup_exact_docs": X.dedup_exact_docs_oracle(),
         "x6_minhash_lsh": X.minhash_lsh_oracle(),
-        "x6c_minhash_oph": X.minhash_oph_oracle(),
         "x7_ngram_jaccard": X.ngram_jaccard_oracle(),
         "x8_ann_brute_topk": X.ann_brute_oracle(),
         "x9_embed_neardup": X.embed_neardup_oracle(),

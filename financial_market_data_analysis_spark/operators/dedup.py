@@ -11,12 +11,13 @@ Scale design notes (the whole point of these implementations):
   (band, band_hash), so Spark hash-partitions buckets across executors.
   Candidates are then verified with exact Jaccard — only candidate
   pairs pay the set-intersection cost.
-- Hashes are md5-based (not xxhash/murmur) by default: md5 is
-  bit-identical across engines, which makes the whole pipeline
-  oracle-testable in ANSI SQL. ``hash_method="xxhash64"`` swaps in
-  Spark's codegen'd 64-bit hash for the production path — same
-  topology, no hex-string materialization, ~an order of magnitude
-  cheaper per shingle (benchmarked as ``x6b_minhash_xxhash``).
+- MinHash has ONE signature: the md5 k-fold (seed ``p`` hashes shingle
+  ``x`` as ``md5("p:" || x)``, minhash = lexicographic min of the hex
+  digests). md5 is bit-identical across engines, so every MinHash query
+  keeps a DuckDB oracle. Measured on the benchmark corpus (2000 docs,
+  two seeds), one-permutation hashing was slower than the k-fold, and
+  xxhash64 saved ~0.25 s of a ~14 s pass — inside run-to-run spread —
+  at the cost of the SQL oracle, so neither earns a second code path.
 
 Materialization policy: the fused pipelines eagerly materialize the
 *small* intermediates (candidate pairs, verified pairs) with
@@ -113,101 +114,16 @@ def shingle_arrays(
     )
 
 
-def _minhash_expr(sh_arr: Column, seed: int, hash_method: str = "md5") -> Column:
-    """min over the doc's shingles of ``hash(seed:shingle)`` — a
-    row-local array fold.
-
-    ``"md5"``: lexicographic min of hex strings, identical to SQL
-    ``min()`` over the exploded rows — the oracle-parity path.
-    ``"xxhash64"``: numeric min of 64-bit hashes — codegen'd JVM hash,
-    no hex-string allocation; the production path (not SQL-portable)."""
-    if hash_method == "md5":
-        return F.array_min(
-            F.transform(
-                sh_arr,
-                lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s).cast("binary")),
-            )
+def _minhash_expr(sh_arr: Column, seed: int) -> Column:
+    """min over the doc's shingles of ``md5("seed:" || shingle)`` — a
+    row-local array fold. The lexicographic min of hex strings equals
+    SQL ``min()`` over the exploded rows, which is what keeps the
+    signature oracle-testable in DuckDB."""
+    return F.array_min(
+        F.transform(
+            sh_arr,
+            lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s).cast("binary")),
         )
-    if hash_method == "xxhash64":
-        return F.array_min(
-            F.transform(sh_arr, lambda s: F.xxhash64(s, F.lit(seed)))
-        )
-    raise ValueError(f"unknown hash_method: {hash_method}")
-
-
-def _hex_digit(d: Column) -> Column:
-    chain = F.when(d == "0", 0)
-    for i, ch in enumerate("123456789abcdef", start=1):
-        chain = chain.when(d == ch, i)
-    return chain
-
-
-def _hex_bucket(h: Column, k: int) -> Column:
-    """Bucket a hex digest by its leading digit(s) mod k — 16-branch
-    CASE chains, the only hex→int mapping expressible identically in
-    Spark and ANSI SQL (no ``conv`` in DuckDB). One digit covers
-    k ≤ 16; larger k reads a second digit (two 16-branch chains, not
-    one 256-branch chain). k > 256 raises — a silent single-digit
-    bucket would leave OPH slots 16..k-1 permanently NULL and let
-    rotation densification quietly collapse recall to 16 slots."""
-    if k > 256:
-        raise ValueError(f"_hex_bucket supports at most 256 buckets, got {k}")
-    b = _hex_digit(F.substring(h, 1, 1))
-    if k > 16:
-        b = b * 16 + _hex_digit(F.substring(h, 2, 1))
-    return b % k
-
-
-def oph_slots(hashed_col: str, n_hashes: int) -> Column:
-    """One-permutation-hashing signature slots over a pre-hashed
-    shingle array column: slot j = min digest among shingles whose
-    digest bucket is j (empty slots stay NULL; ``oph_filled_slot``
-    rotation-densifies them — Shrivastava & Li's densified OPH).
-
-    vs the k-seed fold: ONE md5 per shingle instead of k, at the price
-    of slightly noisier (still Jaccard-unbiased in expectation) band
-    recall; the exact-Jaccard verify stage downstream keeps precision
-    identical. Fully hex-portable, so unlike xxhash64 this path keeps
-    a DuckDB oracle. Measured honestly: at sf0.1 it only ties the
-    seeded fold (~3-4 s — post-r3, shuffle/verify overheads dominate,
-    not the fold); the k-fold digest saving matters when shingles are
-    long or k is large, which is exactly the 100 TB regime.
-
-    The bucket CASE chain evaluates ONCE per shingle: ``oph_bucketed``
-    hoists it into a (bucket, digest) struct-array COLUMN materialized
-    by its own projection (a multi-referenced non-cheap alias, which
-    CollapseProject keeps), so the k slot extractions here only pay an
-    int compare per element.
-    """
-    bucketed = F.col(hashed_col)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    F.filter(bucketed, lambda s: s["b"] == j),
-                    lambda s: s["h"],
-                )
-            )
-            for j in range(n_hashes)
-        ]
-    )
-
-
-def oph_bucketed(hashed: Column, n_hashes: int) -> Column:
-    """(bucket, digest) struct array — the one-pass bucketing input for
-    ``oph_slots``; alias this into a column of its own projection."""
-    return F.transform(
-        hashed,
-        lambda h: F.struct(_hex_bucket(h, n_hashes).alias("b"), h.alias("h")),
-    )
-
-
-def oph_filled_slot(slots_col: str, j: int, n_hashes: int) -> Column:
-    return F.coalesce(
-        *[
-            F.element_at(F.col(slots_col), ((j + i) % n_hashes) + 1)
-            for i in range(n_hashes)
-        ]
     )
 
 
@@ -232,16 +148,12 @@ def lsh_bands(
     id_col: str = "doc_id",
     n_hashes: int = N_MINHASH,
     band_size: int = BAND_SIZE,
-    hash_method: str = "md5",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id, band, band_hash) — row-local banding over the shingle-array
-    table: band hash = hash of the band's minhashes in seed order,
-    exactly the hash the grouped formulation produces.
-
-    ``hash_method="oph-md5"`` switches to one-permutation hashing:
-    shingles are digested ONCE and bucketed into the k signature slots
-    (see ``oph_band_structs``) instead of paying k independent folds.
+    table: band hash = md5 of the band's minhashes in seed order,
+    exactly the hash the grouped formulation produces (and the one the
+    DuckDB oracles compute), so the signature stays the one md5 k-fold.
 
     ``carry_cols`` passes extra ``src`` columns through to the output
     unchanged — the streaming ingest gate (t13) carries ``sh_arr``
@@ -249,49 +161,15 @@ def lsh_bands(
     ROW-LOCALLY at join time (a streaming side cannot join back to its
     own shingle table: that would be a stream-stream self-join).
     """
-    carry = [F.col(c) for c in carry_cols]
-    if hash_method == "oph-md5":
-        hashed = F.transform(
-            F.col("sh_arr"), lambda s: F.md5(s.cast("binary"))
-        )
-        pre = (
-            src.select(
-                F.col(id_col), *carry,
-                oph_bucketed(hashed, n_hashes).alias("__hb"),
-            )
-            .select(
-                F.col(id_col), *carry,
-                oph_slots("__hb", n_hashes).alias("__sl"),
-            )
-        )
-        structs = []
-        for b in range(n_hashes // band_size):
-            cols = [
-                oph_filled_slot("__sl", j, n_hashes)
-                for j in range(b * band_size, (b + 1) * band_size)
-            ]
-            bh = F.md5(F.concat_ws(",", *cols).cast("binary"))
-            structs.append(
-                F.struct(F.lit(b).alias("band"), bh.alias("band_hash"))
-            )
-        return pre.select(
-            F.col(id_col), *carry, F.explode(F.array(*structs)).alias("bb")
-        ).select(
-            id_col, *carry_cols,
-            F.col("bb.band").alias("band"),
-            F.col("bb.band_hash").alias("band_hash"),
-        )
     structs = []
     for b in range(n_hashes // band_size):
         seeds = range(b * band_size, (b + 1) * band_size)
-        mhs = [_minhash_expr(F.col("sh_arr"), p, hash_method) for p in seeds]
-        if hash_method == "md5":
-            bh = F.md5(F.concat_ws(",", *mhs).cast("binary"))
-        else:
-            bh = F.xxhash64(*mhs).cast("string")
+        mhs = [_minhash_expr(F.col("sh_arr"), p) for p in seeds]
+        bh = F.md5(F.concat_ws(",", *mhs).cast("binary"))
         structs.append(F.struct(F.lit(b).alias("band"), bh.alias("band_hash")))
     return src.select(
-        F.col(id_col), *carry, F.explode(F.array(*structs)).alias("bb")
+        F.col(id_col), *[F.col(c) for c in carry_cols],
+        F.explode(F.array(*structs)).alias("bb"),
     ).select(
         id_col, *carry_cols,
         F.col("bb.band").alias("band"),
@@ -488,7 +366,6 @@ def minhash_lsh_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    hash_method: str = "md5",
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH bands → candidate
     pairs → exact-Jaccard verify → threshold filter.
@@ -512,7 +389,7 @@ def minhash_lsh_dedup(
     corpus-sized table outlives the call.
     """
     shingled = shingle_arrays(ensure_parallelism(df), id_col, text_col).persist()
-    bands = lsh_bands(shingled, id_col, hash_method=hash_method).persist()
+    bands = lsh_bands(shingled, id_col).persist()
     # No pre-count: a cold .persist() is NOT raced by the band
     # self-join's concurrent stage subtrees — BlockManager's per-block
     # get-or-compute lock serializes the two readers of each partition,
@@ -1413,84 +1290,3 @@ def pagerank(
         )
     return ranks
 
-
-def sliced_minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 32,
-    slices_per_digest: int = 4,
-    shingle_arr: DataFrame | None = None,
-) -> DataFrame:
-    """(id, seed, minhash) like :func:`minhash_signatures`, but each
-    md5 digest serves ``slices_per_digest`` seeds as disjoint 8-hex
-    (32-bit) substrings: seed s hashes shingle x as
-    ``substr(md5("{s // slices}:" x), (s % slices)*8, 8)``. For large
-    signature sweeps (x80 prices k up to 32) this cuts the dominant
-    cost — md5 calls per shingle — by the slice factor while keeping
-    the estimator family: disjoint bit ranges of a well-mixed digest
-    behave as independent hashes, and 32 bits per slice keeps min-
-    collision probability negligible at corpus scale. Lexicographic
-    min over fixed-width lowercase hex equals numeric min, so the
-    DuckDB twin is a verbatim substr/min mirror.
-
-    Like the row-local :func:`minhash_signatures` this never shuffles
-    corpus rows, but the digest arrays are materialized behind a
-    ``localCheckpoint`` barrier before slicing: expressions inside a
-    higher-order ``transform`` lambda are NOT subexpression-eliminated
-    and Catalyst's CollapseProject re-inlines a projected alias into
-    every consumer, so without the barrier each of the four slices
-    re-evaluates its md5 and the slicing buys nothing (measured 4x).
-    The barrier costs one digests-sized local materialization
-    (~n_digests x 32 hex chars per shingle)."""
-    n_digests = (n_hashes + slices_per_digest - 1) // slices_per_digest
-    src = (
-        shingle_arr
-        if shingle_arr is not None
-        else shingle_arrays(df, id_col, text_col)
-    )
-    # closures keep the lambdas single-parameter: F.transform calls a
-    # two-parameter lambda as (element, INDEX), silently replacing a
-    # bound constant with the array position
-    def _digest(j: int) -> Column:
-        return F.transform(
-            F.col("sh_arr"),
-            lambda s: F.md5(F.concat(F.lit(f"{j}:"), s).cast("binary")),
-        )
-
-    hashed = src.select(
-        F.col(id_col), *[_digest(j).alias(f"__d{j}") for j in range(n_digests)]
-    ).localCheckpoint(eager=False)  # CSE barrier: hash once, slice 4x
-
-    def _slice_min(j: int, off: int) -> Column:
-        return F.array_min(
-            F.transform(
-                F.col(f"__d{j}"), lambda h: F.substring(h, off + 1, 8)
-            )
-        )
-
-    mhs = F.array(
-        *[
-            _slice_min(s // slices_per_digest, (s % slices_per_digest) * 8)
-            for s in range(n_hashes)
-        ]
-    )
-    return hashed.select(
-        F.col(id_col), F.posexplode(mhs).alias("seed", "mh")
-    )
-
-
-def sliced_minhash_sql(
-    sh: str = "sh",
-    n_hashes: int = 32,
-    slices_per_digest: int = 4,
-) -> str:
-    """DuckDB twin of :func:`sliced_minhash_signatures` as a CTE body
-    producing (doc_id, seed, mh)."""
-    return f"""
-        SELECT doc_id, seed,
-               min(substr(md5((seed // {slices_per_digest}) || ':' || shingle),
-                          (seed % {slices_per_digest}) * 8 + 1, 8)) AS mh
-        FROM {sh}, generate_series(0, {n_hashes - 1}) g(seed)
-        GROUP BY doc_id, seed
-    """

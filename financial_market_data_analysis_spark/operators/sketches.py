@@ -13,9 +13,8 @@ training-data pipeline needs when exact per-key state stops fitting.
 Determinism/oracle-portability: every hash is a fixed-width slice of
 md5 over a salted string, mapped to an integer identically in Spark
 (``conv(hex, 16, 10)``) and DuckDB (``('0x' || hex)::BIGINT``) — no
-engine-native hash whose value could differ across sides. Production
-swaps md5 for xxhash64 exactly as the MinHash family does
-(dedup.py:14-19); the topology is unchanged.
+engine-native hash whose value could differ across sides — the same
+reason MinHash keeps md5 as its one signature (dedup.py).
 """
 
 from __future__ import annotations

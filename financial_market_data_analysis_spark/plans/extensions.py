@@ -268,17 +268,6 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_lsh_dedup(docs_augmented(spark, sf_dir), threshold=0.5)
 
 
-def q_minhash_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production-hash variant of x6: identical topology, xxhash64
-    minhashes/band hashes instead of md5 hex strings. No SQL oracle
-    (DuckDB has no xxhash64) → rows-only check; the exact-Jaccard
-    verify stage still guarantees every emitted pair is a true
-    near-dup at the same threshold."""
-    return D.minhash_lsh_dedup(
-        docs_augmented(spark, sf_dir), threshold=0.5, hash_method="xxhash64"
-    )
-
-
 def _shingles_sql(src: str, n: int | None = None) -> str:
     n = D.SHINGLE if n is None else n
     gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(n))
@@ -292,49 +281,13 @@ def _shingles_sql(src: str, n: int | None = None) -> str:
     """
 
 
-def _oph_bands_cte() -> str:
-    """OPH band CTEs mirroring ``oph_band_structs``: one md5 per
-    shingle, first-hex-digit bucketing, rotation densification."""
-    k, bs = D.N_MINHASH, D.BAND_SIZE
-    bucket = (
-        "CASE substr(h, 1, 1) "
-        + " ".join(
-            f"WHEN '{ch}' THEN {i % k}"
-            for i, ch in enumerate("0123456789abcdef")
-        )
-        + " END"
-    )
-    slot_cols = ", ".join(
-        f"min(CASE WHEN bucket = {j} THEN h END) AS s{j}" for j in range(k)
-    )
-    filled = ", ".join(
-        "coalesce(" + ", ".join(f"s{(j + i) % k}" for i in range(k)) + f") AS f{j}"
-        for j in range(k)
-    )
-    comma_join = " || ',' || "
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"md5({comma_join.join(f'f{j}' for j in range(b * bs, (b + 1) * bs))})"
-        f" AS band_hash FROM filled"
-        for b in range(k // bs)
-    )
-    return f"""
-        mh AS (
-            SELECT doc_id, {bucket} AS bucket, h
-            FROM (SELECT doc_id, md5(shingle) AS h FROM sh)
-        ),
-        slots AS (SELECT doc_id, {slot_cols} FROM mh GROUP BY doc_id),
-        filled AS (SELECT doc_id, {filled} FROM slots),
-        bands AS ({band_rows})
-    """
-
-
-def _seeded_bands_cte(
+def _lsh_band_ctes(
     sh: str = "sh", mh: str = "mh", bands: str = "bands",
     band_size: int | None = None,
 ) -> str:
-    """Seeded MinHash band CTE pair over the shingle table ``sh``;
-    CTE names are parameterized so one oracle can band TWO corpora
+    """MinHash band CTE pair over the shingle table ``sh`` — the DuckDB
+    twin of the md5 k-fold in ``operators.dedup.lsh_bands``; CTE names
+    are parameterized so one oracle can band TWO corpora
     side-by-side (the t13 ingest gate bands the incoming slice and
     the corpus index independently), and ``band_size`` so the x69
     tuning sweep can emit several band configurations over ONE shared
@@ -355,11 +308,11 @@ def _seeded_bands_cte(
     """
 
 
-def minhash_lsh_oracle(threshold: float = 0.5, bands_cte: str | None = None) -> str:
+def minhash_lsh_oracle(threshold: float = 0.5) -> str:
     return f"""
         WITH aug AS ({DOCS_AUG_CTE}),
         sh AS ({_shingles_sql("aug")}),
-        {bands_cte if bands_cte is not None else _seeded_bands_cte()},
+        {_lsh_band_ctes()},
         pairs AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM bands a JOIN bands b
@@ -1088,7 +1041,7 @@ X81_SHARDS = 16  # packing streams for the sweep (scale = parallelism)
 
 def q_pack_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x81 — the sequence-packing BUDGET trade-off, measured (the
-    x80 sweep discipline applied to x24's packer): per token budget
+    published-trade-off pattern applied to x24's packer): per token budget
     B ∈ {512, 1024, 2048, 4096}, the two costs a pre-training data
     engineer trades when picking the packed context length:
 
@@ -1102,7 +1055,7 @@ def q_pack_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Published per budget: doc counts, cut count + fraction, pack
     count, pad tokens + fraction. Every count is exact integer
-    arithmetic on one shared cumulative-offset frame (the x80
+    arithmetic on one shared cumulative-offset frame (the
     one-pass-many-budgets trick: ONE window pass over the sharded
     corpus serves all four budgets); the two fractions are single
     IEEE divisions of identical integers, rounded to 6 on both
@@ -1214,27 +1167,6 @@ def pack_budget_sweep_oracle() -> str:
         )
         {selects}
     """
-
-
-EMB_DIM = 64  # fixed embedding dimensionality of the driver's table
-
-
-def _bucket_sql(vec: str, n_planes: int = S.N_PLANES, dim: int = EMB_DIM) -> str:
-    """Mirror of similarity.hyperplane_bucket: bit p from the sign of
-    Σ_d ±v[d], sign from md5('p:d') hex-digit parity (d 0-based).
-    ``generate_series`` bounds must be constant in DuckDB (no lateral
-    column args), hence the fixed ``dim``."""
-    odd = "['1','3','5','7','9','b','d','f']"
-    bits = []
-    for p in range(n_planes):
-        dot = (
-            f"(SELECT sum(CASE WHEN list_contains({odd}, "
-            f"substr(md5('{p}:' || (i - 1)), ((i - 1) % 32) + 1, 1)) "
-            f"THEN CAST({vec}[i] AS DOUBLE) ELSE -CAST({vec}[i] AS DOUBLE) END) "
-            f"FROM generate_series(1, {dim}) g(i))"
-        )
-        bits.append(f"(CASE WHEN {dot} > 0 THEN '1' ELSE '0' END)")
-    return " || ".join(bits)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2372,20 +2304,6 @@ def corpus_pipeline_oracle() -> str:
     """
 
 
-def q_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-permutation-hashing fast path of x6: one md5 per shingle
-    (instead of 8 seeded folds) bucketed into the signature slots, with
-    rotation densification — hex-portable, so unlike the xxhash64
-    variant it keeps a full value-hash oracle."""
-    return D.minhash_lsh_dedup(
-        docs_augmented(spark, sf_dir), threshold=0.5, hash_method="oph-md5"
-    )
-
-
-def minhash_oph_oracle() -> str:
-    return minhash_lsh_oracle(threshold=0.5, bands_cte=_oph_bands_cte())
-
-
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout keys over (event_id low bits, scaled value):
     the write-path clustering key for two-dimensional scan pruning."""
@@ -2666,7 +2584,7 @@ def containment_oracle() -> str:
     return f"""
         WITH aug AS ({DOCS_FRAG_CTE}),
         sh AS ({_shingles_sql("aug")}),
-        {_seeded_bands_cte()},
+        {_lsh_band_ctes()},
         pairs AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM bands a JOIN bands b
@@ -3333,7 +3251,7 @@ def doc_search_oracle() -> str:
     return f"""
         WITH aug AS ({DOCS_AUG_CTE}),
         sh AS ({_shingles_sql("aug")}),
-        {_seeded_bands_cte()},
+        {_lsh_band_ctes()},
         qb AS (
             SELECT doc_id, band, band_hash FROM bands
             WHERE doc_id % {X57_QUERY_MOD} = 0 AND doc_id < {DUP_OFFSET}
@@ -3603,8 +3521,8 @@ def ingest_gate_oracle() -> str:
         WITH incoming AS ({_T13_INCOMING_CTE}),
         sh_i AS ({_shingles_sql("incoming")}),
         sh_c AS ({_shingles_sql("documents")}),
-        {_seeded_bands_cte("sh_i", "mh_i", "bands_i")},
-        {_seeded_bands_cte("sh_c", "mh_c", "bands_c")},
+        {_lsh_band_ctes("sh_i", "mh_i", "bands_i")},
+        {_lsh_band_ctes("sh_c", "mh_c", "bands_c")},
         sizes_i AS (
             SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
             FROM sh_i GROUP BY doc_id
@@ -3919,8 +3837,8 @@ def incremental_dedup_oracle() -> str:
         WITH arrivals AS ({_X60_ARRIVALS_CTE}),
         sh_n AS ({_shingles_sql("arrivals")}),
         sh_o AS ({_shingles_sql("documents")}),
-        {_seeded_bands_cte("sh_n", "mh_n", "bands_n")},
-        {_seeded_bands_cte("sh_o", "mh_o", "bands_o")},
+        {_lsh_band_ctes("sh_n", "mh_n", "bands_n")},
+        {_lsh_band_ctes("sh_o", "mh_o", "bands_o")},
         cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM bands_n a JOIN bands_n b
@@ -4017,8 +3935,8 @@ def index_dedup_oracle() -> str:
         WITH arrivals AS ({_T14_ARRIVALS_CTE}),
         sh_a AS ({_shingles_sql("arrivals")}),
         sh_c AS ({_shingles_sql("documents")}),
-        {_seeded_bands_cte("sh_a", "mh_a", "bands_a")},
-        {_seeded_bands_cte("sh_c", "mh_c", "bands_c")},
+        {_lsh_band_ctes("sh_a", "mh_a", "bands_a")},
+        {_lsh_band_ctes("sh_c", "mh_c", "bands_c")},
         sizes_a AS (SELECT doc_id, count(*) AS n_sh FROM sh_a GROUP BY doc_id),
         sizes_c AS (SELECT doc_id, count(*) AS n_sh FROM sh_c GROUP BY doc_id),
         cand_corp AS (
@@ -4750,10 +4668,6 @@ def _rp_signs_k(k: int) -> list[list[int]]:
         ]
         for j in range(k)
     ]
-
-
-def _rp_signs() -> list[list[int]]:
-    return _rp_signs_k(RP_OUT_DIMS)
 
 
 def _rp_project_expr_k(k: int) -> Column:
@@ -6707,210 +6621,3 @@ def ann_ranking_quality_oracle() -> str:
         {selects}
     """
 
-
-# ---------------------------------------------------------------------------
-# x80 — MinHash sketch-size vs Jaccard-estimate-error trade-off
-
-X80_KS = (4, 8, 16, 32)
-_X80_MAX_K = 32
-
-
-def q_minhash_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x80 — the MinHash SKETCH-SIZE trade-off, measured (the
-    x78/x79 published-trade-off pattern applied to the sketch itself):
-    per signature length k ∈ {4, 8, 16, 32}, how close is the
-    estimated Jaccard (the fraction of matching minhash seeds — an
-    unbiased estimator with σ = sqrt(J(1−J)/k)) to the TRUE shingle
-    Jaccard, over the banded candidate pairs the sliced 8-seed config
-    surfaces (banding runs on THIS query's sliced hash family, so the
-    candidate set is not x78's minhash_signatures-based one — parity
-    holds because the oracle bands the same sliced values; r14
-    ADVICE wording fix). This is the number consulted before sizing a corpus-
-    scale dedup run: k is bytes-per-document AND shuffle bytes in
-    every band join, and the table shows what each doubling buys.
-    The signatures NEST (seed s belongs to every k > s), so one
-    32-seed pass prices all four sketch sizes — the x75 prefix trick.
-
-    Published per k: candidate-pair count, the number of pairs whose
-    estimate lands within 0.05 / 0.10 of truth, and the worst error.
-    The within-ε columns are computed in EXACT integer arithmetic
-    (|m/k − i/u| < ε  ⟺  |m·u − i·k| / ε < k·u with 1/ε integer), so
-    the counts hash identically cross-engine with no float-boundary
-    risk; only the max error is a rounded double (max is
-    order-independent, the w12 ULP convention).
-
-    Scale shape: shingles/signatures are row-local; the candidate join
-    is the banded LSH equi-join (never all-pairs); the truth join
-    touches only candidate-pair shingle rows; the per-k sweep is one
-    conditional aggregate over a pairs-sized frame."""
-    aug = docs_augmented(spark, sf_dir)
-    # sliced signatures: 8 md5 digests serve all 32 seeds as 32-bit
-    # substrings — the k-fold md5 cost is the sweep's dominant term
-    # and slicing cuts it 4x (operators/dedup.py)
-    # ensure_parallelism (r16, guide §2.5 input skew): the k-fold md5
-    # slice pass is the query's dominant CPU and aug inherits the
-    # single-file corpus scan's 2 partitions — profiled at 6.0 s on 2
-    # tasks while 30 cores idled. Row-local hashing; results identical.
-    sigs = D.sliced_minhash_signatures(
-        D.ensure_parallelism(aug), n_hashes=_X80_MAX_K
-    ).localCheckpoint(eager=False)  # feeds banding AND the match counts
-    pairs = D.lsh_candidate_pairs(
-        sigs.filter(F.col("seed") < D.N_MINHASH)
-    ).localCheckpoint(eager=False)  # feeds truth AND estimate joins
-    # the TRUTH join tokenizes only candidate docs — the corpus-wide
-    # shingle table costs ~5x the rest of the query and only the
-    # ~pairs-sized doc set ever reaches a Jaccard verification
-    sh = D.shingle_table(
-        aug.join(F.broadcast(D.candidate_ids(pairs)), "doc_id")
-    ).localCheckpoint(eager=False)  # feeds sizes AND the intersection
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(
-            sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"), "seed", F.col("mh").alias("mh_a")
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"), "seed", F.col("mh").alias("mh_b")
-    )
-    matches = (
-        pairs.join(sa, "doc_a")
-        .join(sb, ["doc_b", "seed"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            *[
-                F.sum(
-                    F.when(
-                        (F.col("seed") < k)
-                        & (F.col("mh_a") == F.col("mh_b")),
-                        1,
-                    ).otherwise(0)
-                ).alias(f"m{k}")
-                for k in X80_KS
-            ]
-        )
-    )
-    t = (
-        matches.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-                "n_sh", "n_a"
-            ),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "n_sh", "n_b"
-            ),
-            "doc_b",
-        )
-        .withColumn("u", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .localCheckpoint(eager=False)  # feeds the four per-k selects
-    )
-    per_k = [
-        t.agg(
-            F.lit(k).cast("int").alias("n_hashes"),
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(
-                (
-                    20 * F.abs(F.col(f"m{k}") * F.col("u") - F.col("n_inter") * k)
-                    < k * F.col("u")
-                ).cast("long")
-            ).alias("n_err_lt_5pct"),
-            F.sum(
-                (
-                    10 * F.abs(F.col(f"m{k}") * F.col("u") - F.col("n_inter") * k)
-                    < k * F.col("u")
-                ).cast("long")
-            ).alias("n_err_lt_10pct"),
-            F.round(
-                F.max(
-                    F.abs(
-                        F.col(f"m{k}") / F.lit(float(k))
-                        - F.col("n_inter") / F.col("u").cast("double")
-                    )
-                ),
-                6,
-            ).alias("max_abs_err"),
-        )
-        for k in X80_KS
-    ]
-    out = per_k[0]
-    for p in per_k[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def minhash_size_sweep_oracle() -> str:
-    k_max = _X80_MAX_K
-    selects = "\n        UNION ALL\n        ".join(
-        f"""SELECT {k} AS n_hashes,
-               count(*) AS n_pairs,
-               CAST(sum(CASE WHEN 20 * abs(m{k} * u - n_inter * {k})
-                             < {k} * u THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_err_lt_5pct,
-               CAST(sum(CASE WHEN 10 * abs(m{k} * u - n_inter * {k})
-                             < {k} * u THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_err_lt_10pct,
-               round(max(abs(m{k} / {float(k)!r}
-                   - n_inter / CAST(u AS DOUBLE))), 6) AS max_abs_err
-        FROM t"""
-        for k in X80_KS
-    )
-    m_cols = ", ".join(
-        f"CAST(sum(CASE WHEN sa.seed < {k} AND sa.mh = sb.mh "
-        f"THEN 1 ELSE 0 END) AS BIGINT) AS m{k}"
-        for k in X80_KS
-    )
-    return f"""
-        WITH aug AS ({DOCS_AUG_CTE}),
-        sh AS MATERIALIZED ({_shingles_sql("aug")}),
-        mh AS MATERIALIZED (
-            {D.sliced_minhash_sql("sh", n_hashes=k_max)}
-        ),
-        bands AS (
-            SELECT doc_id, CAST(seed // {D.BAND_SIZE} AS INT) AS band,
-                   md5(string_agg(mh, ',' ORDER BY seed)) AS band_hash
-            FROM mh WHERE seed < {D.N_MINHASH}
-            GROUP BY doc_id, seed // {D.BAND_SIZE}
-        ),
-        pairs AS MATERIALIZED (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.band_hash = b.band_hash
-             AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT p.doc_a, p.doc_b, count(*) AS n_inter
-            FROM pairs p
-            JOIN sh a ON a.doc_id = p.doc_a
-            JOIN sh b ON b.doc_id = p.doc_b AND b.shingle = a.shingle
-            GROUP BY 1, 2
-        ),
-        m AS (
-            SELECT p.doc_a, p.doc_b, {m_cols}
-            FROM pairs p
-            JOIN mh sa ON sa.doc_id = p.doc_a
-            JOIN mh sb ON sb.doc_id = p.doc_b AND sb.seed = sa.seed
-            GROUP BY 1, 2
-        ),
-        t AS (
-            SELECT m.*, COALESCE(i.n_inter, 0) AS n_inter,
-                   sa.n_sh + sb.n_sh - COALESCE(i.n_inter, 0) AS u
-            FROM m
-            LEFT JOIN inter i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
-            JOIN sizes sa ON sa.doc_id = m.doc_a
-            JOIN sizes sb ON sb.doc_id = m.doc_b
-        )
-        {selects}
-    """

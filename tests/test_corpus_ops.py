@@ -344,10 +344,10 @@ def test_pack_sequences_budget_invariant(spark):
     assert packed.count() == 300
 
 
-def test_oph_bands_densify_sparse_docs(spark):
-    """A 1-shingle doc fills only one OPH slot; rotation densification
-    must still produce non-null hashes for all 4 bands, and identical
-    texts must collide on every band."""
+def test_lsh_bands_short_doc_fills_every_band(spark):
+    """A 1-shingle doc (the shortest that survives ``shingle_arrays``)
+    still gets a minhash for every seed, so all 4 bands carry a
+    non-null hash, and identical texts collide on every band."""
     from financial_market_data_analysis_spark.operators.dedup import (
         lsh_bands,
         shingle_arrays,
@@ -357,7 +357,7 @@ def test_oph_bands_densify_sparse_docs(spark):
         [(1, "alpha beta gamma"), (2, "alpha beta gamma")],
         "doc_id long, text string",
     )
-    bands = lsh_bands(shingle_arrays(docs), hash_method="oph-md5").collect()
+    bands = lsh_bands(shingle_arrays(docs)).collect()
     assert len(bands) == 8  # 2 docs x 4 bands
     assert all(r.band_hash is not None for r in bands)
     by_doc = {}
@@ -499,27 +499,6 @@ def test_sample_then_split_keeps_all_splits(spark):
     kept = stratified_hash_sample(docs, fractions={"en": 0.5})
     splits = {r["split"] for r in hash_split(kept).select("split").distinct().collect()}
     assert splits == {"train", "val", "test"}
-
-
-def test_hex_bucket_two_digit_span_and_guard(spark):
-    """OPH bucketing past 16 slots reads a second hex digit (slots
-    16..k-1 must be reachable), and k > 256 raises instead of silently
-    collapsing recall."""
-    import pytest as _pytest
-
-    from financial_market_data_analysis_spark.operators.dedup import _hex_bucket
-
-    hashes = spark.range(2000).select(
-        F.md5(F.col("id").cast("string").cast("binary")).alias("h")
-    )
-    buckets = hashes.select(_hex_bucket(F.col("h"), 32).alias("b"))
-    stats = buckets.agg(
-        F.countDistinct("b").alias("n"), F.min("b").alias("lo"), F.max("b").alias("hi")
-    ).first()
-    assert stats["n"] > 16  # the second digit is engaged
-    assert stats["lo"] >= 0 and stats["hi"] <= 31
-    with _pytest.raises(ValueError):
-        _hex_bucket(F.col("h"), 257)
 
 
 def test_bpe_merge_greedy_overlap_semantics(spark):
@@ -831,46 +810,3 @@ def test_filter_funnel_is_conserving_and_every_stage_bites(spark):
         assert r.n_dropped > 0, f"vacuous stage: {r.stage}"
     for a, b in zip(rows, rows[1:]):
         assert a.n_out == b.n_in
-
-
-def test_sliced_minhash_matches_sql_twin(spark):
-    """x80's sliced sketch: every (doc, seed) minhash from the
-    digest-slicing Spark build must equal the DuckDB twin — including
-    that seed s really reads digest s//4 at offset (s%4)*8 (the
-    F.transform two-parameter-lambda trap this test would catch:
-    transform calls (element, INDEX), silently replacing a bound
-    constant)."""
-    import duckdb
-
-    import financial_market_data_analysis_spark.operators.dedup as D
-    import financial_market_data_analysis_spark.plans.extensions as X
-
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta zeta eta theta"),
-        (3, "iota kappa lambda mu nu xi omicron pi"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    got = sorted(
-        (r.doc_id, r.seed, r.mh)
-        for r in D.sliced_minhash_signatures(df, n_hashes=8).collect()
-    )
-    con = duckdb.connect()
-    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            f"WITH sh AS ({X._shingles_sql('d')}) "
-            + D.sliced_minhash_sql("sh", n_hashes=8)
-        ).fetchall()
-    )
-    assert got == want
-    # the slices of one digest must actually differ (a wrong offset
-    # that reuses slice 0 for all four seeds would still "match" a
-    # similarly wrong oracle only if both engines made the same
-    # mistake — this pins the intra-digest variation directly)
-    per_doc = {}
-    for d, s, mh in got:
-        per_doc.setdefault(d, []).append(mh)
-    assert all(len(set(v[:4])) > 1 for v in per_doc.values())

@@ -158,13 +158,11 @@ def test_adjudication_window_boundary_is_stable():
     ]
     assert keys[37:50] == rewritten, keys[37:50]
     # every oracle key maps to a query, and rows-only set is exactly
-    # the three documented queries
+    # the two documented queries
     oracles = e.oracle_sql()
     assert set(oracles) <= set(keys)
     rows_only = set(keys) - set(oracles)
-    assert rows_only == {
-        "ml5_window_mlp", "ml2_train_metrics", "x6b_minhash_xxhash"
-    }
+    assert rows_only == {"ml5_window_mlp", "ml2_train_metrics"}
     # r7 verdict #2: every window slot carries a hash-signal query —
     # the rows-only entries sit permanently past position 50
     assert rows_only.isdisjoint(keys[:50]), sorted(rows_only & set(keys[:50]))

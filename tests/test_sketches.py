@@ -667,93 +667,3 @@ def test_kmv_bottomk_merge_is_idempotent_and_order_free(spark):
     b = sorted(r["__u"] for r in merged.select("__u").collect())
     assert len(a) == k
     assert a == b
-
-
-def test_x80_within_eps_integer_ties_cross_engine(spark, duck):
-    """r14 verdict #6 — the HLL-lesson sweep applied to x80's
-    within-ε counting kernel. The branch is the strict-< in
-    ``ε·|m·u − i·k| < k·u`` (1/ε integer: 20 for 5%, 10 for 10%),
-    and the sf fixtures never land a pair exactly ON a boundary.
-    Hostile (m, i, u) quadruples per k ∈ {4, 8, 16, 32}:
-
-    - EXACT 5% ties from both sides (|m·u − i·k| = k·u/20, via
-      u = 20k, m = k/2, i = 9k and 11k) — strict-< must EXCLUDE them
-      in both engines;
-    - an exact 10% tie that is 5%-outside (i = 8k);
-    - Δ = 0 (dead center, included) and u = 10^12 (the products reach
-      ~6·10^14 — pins that neither engine's integer arithmetic
-      truncates or silently wraps at scale).
-
-    The Spark expression and the oracle SQL are the literal fragments
-    the shipped query/oracle use, evaluated per row side-by-side."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from financial_market_data_analysis_spark.plans.extensions import X80_KS
-
-    rows = []
-    for k in X80_KS:
-        u = 20 * k
-        m = k // 2
-        rows += [
-            (k, m, 9 * k, u, "tie5_pos"),
-            (k, m, 11 * k, u, "tie5_neg"),
-            (k, m, 8 * k, u, "tie10_pos"),
-            (k, m, 12 * k, u, "tie10_neg"),
-            (k, m, 10 * k, u, "center"),
-            (k, k, 0, 10**12, "huge_u_far"),
-            (k, k, 10**12, 10**12, "huge_u_exact"),
-        ]
-    df = spark.createDataFrame(
-        rows, "k LONG, m LONG, i LONG, u LONG, tag STRING"
-    )
-    got = (
-        df.select(
-            "k",
-            "tag",
-            (
-                20 * F.abs(F.col("m") * F.col("u") - F.col("i") * F.col("k"))
-                < F.col("k") * F.col("u")
-            )
-            .cast("int")
-            .alias("in5"),
-            (
-                10 * F.abs(F.col("m") * F.col("u") - F.col("i") * F.col("k"))
-                < F.col("k") * F.col("u")
-            )
-            .cast("int")
-            .alias("in10"),
-        )
-        .toPandas()
-        .sort_values(["k", "tag"])
-        .reset_index(drop=True)
-    )
-    vals = ", ".join(
-        f"({k}, {m}, {i}, {u}, '{tag}')" for k, m, i, u, tag in rows
-    )
-    want = duck.execute(
-        f"""
-        WITH t(k, m, i, u, tag) AS (VALUES {vals})
-        SELECT k, tag,
-               CASE WHEN 20 * abs(m * u - i * k) < k * u
-                    THEN 1 ELSE 0 END AS in5,
-               CASE WHEN 10 * abs(m * u - i * k) < k * u
-                    THEN 1 ELSE 0 END AS in10
-        FROM t ORDER BY k, tag
-        """
-    ).fetchdf()
-    pd.testing.assert_frame_equal(
-        got, want.astype(got.dtypes.to_dict()), check_exact=True
-    )
-    # the ties really are ties: strictly excluded at their own ε,
-    # included one step inside — pin the intended geometry, not just
-    # engine agreement
-    by = {(r.k, r.tag): (r.in5, r.in10) for r in got.itertuples()}
-    for k in X80_KS:
-        assert by[(k, "tie5_pos")][0] == 0 and by[(k, "tie5_neg")][0] == 0
-        assert by[(k, "tie5_pos")][1] == 1 and by[(k, "tie5_neg")][1] == 1
-        assert by[(k, "tie10_pos")] == (0, 0)
-        assert by[(k, "tie10_neg")] == (0, 0)
-        assert by[(k, "center")] == (1, 1)
-        assert by[(k, "huge_u_far")] == (0, 0)
-        assert by[(k, "huge_u_exact")] == (1, 1)

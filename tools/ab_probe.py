@@ -6,7 +6,7 @@ toggle between passes (A B A B A B ...), so both variants sample the
 same host window. The toggled code must read the env var at CALL time.
 
     python tools/ab_probe.py --flag FMDA_LAZY_MATERIALIZE \
-        --passes 4 x6_minhash_lsh x6c_minhash_oph
+        --passes 4 x6_minhash_lsh x31_minhash_clusters
 
 Reports per-variant pass lists, min and median. Interpretation: with
 interleaving, a consistent per-pass ordering (every B beats the
